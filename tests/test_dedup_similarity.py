@@ -489,6 +489,18 @@ class TestDedupClusters:
         # converged at round 1, confirmed at round 2 -> ONE batch
         assert stats["batches"] == 1 and stats["rounds"] == 2, stats
 
+    def test_cc_stats_is_bounded(self, spark, monkeypatch):
+        """CC_STATS keeps only the newest 256 records, so a
+        long-lived session does not grow driver memory per call."""
+        monkeypatch.setattr(
+            dedup, "CC_STATS", [{"dummy": i} for i in range(300)]
+        )
+        pairs = spark.createDataFrame([(1, 2)], ["doc_a", "doc_b"])
+        dedup.dedup_clusters(pairs).collect()
+        assert len(dedup.CC_STATS) <= 256
+        assert dedup.CC_STATS[-1].get("driver_path") is True
+        assert dedup.CC_STATS[0] == {"dummy": 300 - 255}
+
     def test_driver_gate_parity_with_distributed_loop(self, spark):
         """Round-13 size gate: under the edge cap the labels come
         from a driver union-find — they must be BIT-IDENTICAL to the
@@ -531,7 +543,7 @@ class TestDedupClusters:
         assert fast == slow == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
     def test_driver_gate_byte_cap_falls_back_on_wide_string_ids(
-        self, spark
+        self, spark, monkeypatch
     ):
         """Round-14 (VERDICT #6): the driver gate is byte-aware — a
         graph UNDER the row cap but with wide string ids past the
@@ -542,26 +554,22 @@ class TestDedupClusters:
         wide = [("x" * 300 + str(i), "x" * 300 + str(i + 1))
                 for i in range(4)]
         pairs = spark.createDataFrame(wide, ["doc_a", "doc_b"])
-        key = "spark.vnavc.cc.driverByteCap"
-        try:
-            # 8 doubled edges x ~600 B/row ≈ 4.8 KB > 1 KB cap
-            spark.conf.set(key, "1024")
-            dedup.CC_STATS.clear()
-            out = {
-                r.doc_id: r.cluster_id
-                for r in dedup.dedup_clusters(pairs).collect()
-            }
-            assert dedup.CC_STATS[-1].get("driver_path") is not True
-            assert len(set(out.values())) == 1  # one chain component
-            # same cap, narrow long ids: 8 x 16 B fits -> driver path
-            lpairs = spark.createDataFrame(
-                [(i, i + 1) for i in range(4)], ["doc_a", "doc_b"]
-            )
-            dedup.CC_STATS.clear()
-            dedup.dedup_clusters(lpairs).collect()
-            assert dedup.CC_STATS[-1].get("driver_path") is True
-        finally:
-            spark.conf.unset(key)
+        # 8 doubled edges x ~600 B/row ≈ 4.8 KB > 1 KB cap
+        monkeypatch.setattr(dedup, "CC_DRIVER_BYTE_CAP", 1024)
+        dedup.CC_STATS.clear()
+        out = {
+            r.doc_id: r.cluster_id
+            for r in dedup.dedup_clusters(pairs).collect()
+        }
+        assert dedup.CC_STATS[-1].get("driver_path") is not True
+        assert len(set(out.values())) == 1  # one chain component
+        # same cap, narrow long ids: 8 x 16 B fits -> driver path
+        lpairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(4)], ["doc_a", "doc_b"]
+        )
+        dedup.CC_STATS.clear()
+        dedup.dedup_clusters(lpairs).collect()
+        assert dedup.CC_STATS[-1].get("driver_path") is True
 
     def test_drop_near_dups_keeps_representatives(self, spark):
         docs = spark.createDataFrame(

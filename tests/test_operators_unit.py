@@ -1369,37 +1369,35 @@ class TestRankBucketClassify:
             ref = self._reference(df, k)
             assert got == ref, f"k={k}"
 
-    def test_small_tie_band_exercises_carry(self, spark):
+    def test_small_tie_band_exercises_carry(self, spark, monkeypatch):
         # tie_band smaller than the tie runs forces the band-carry
         # window to do real work (default 8192 would put every test
         # row in band 0); the direct-tie gate is disabled so the
         # BANDED path is actually the one under test (round 14)
+        from vnavc_spark.operators import aggregates
         from vnavc_spark.operators.aggregates import rank_bucket_classify
 
         df = spark.createDataFrame(
             [("A", i, i % 3) for i in range(1, 201)],
             "g string, id long, val long",
         )
-        key = "spark.vnavc.rank.tieDirectCap"
-        try:
-            spark.conf.set(key, "1")
-            got = {
-                (r.g, r.id): r.bucket
-                for r in rank_bucket_classify(
-                    df, ["g"], "val", "id", 5, tie_band=16
-                ).collect()
-            }
-        finally:
-            spark.conf.unset(key)
+        monkeypatch.setattr(aggregates, "RANK_TIE_DIRECT_CAP", 1)
+        got = {
+            (r.g, r.id): r.bucket
+            for r in rank_bucket_classify(
+                df, ["g"], "val", "id", 5, tie_band=16
+            ).collect()
+        }
         assert got == self._reference(df, 5)
 
-    def test_direct_tie_gate_parity_and_routing(self, spark):
+    def test_direct_tie_gate_parity_and_routing(self, spark, monkeypatch):
         """Round-14 (VERDICT #5): groups under the tie-direct cap rank
         boundary ties with ONE window; the result must be identical to
         the banded cascade, and the plan must actually lose the
         band/carry machinery under the gate."""
         import random
 
+        from vnavc_spark.operators import aggregates
         from vnavc_spark.operators.aggregates import rank_bucket_classify
 
         random.seed(11)
@@ -1409,21 +1407,17 @@ class TestRankBucketClassify:
             for i in range(1, 401)
         ]
         df = spark.createDataFrame(rows, "g string, id long, val long")
-        key = "spark.vnavc.rank.tieDirectCap"
 
         def run(cap):
-            spark.conf.set(key, str(cap))
+            monkeypatch.setattr(aggregates, "RANK_TIE_DIRECT_CAP", cap)
             out = rank_bucket_classify(df, ["g"], "val", "id", 5)
             plan = out._jdf.queryExecution().optimizedPlan().toString()
             return {
                 (r.g, r.id): r.bucket for r in out.collect()
             }, plan
 
-        try:
-            direct, dplan = run(1 << 20)  # max n = 400 <= cap
-            banded, bplan = run(1)  # force the banded cascade
-        finally:
-            spark.conf.unset(key)
+        direct, dplan = run(1 << 20)  # max n = 400 <= cap
+        banded, bplan = run(1)  # force the banded cascade
         assert direct == banded == self._reference(df, 5)
         assert "_band" not in dplan and "_band" in bplan
 
@@ -1573,39 +1567,36 @@ class TestOrderedCumsum:
         with pytest.raises(TypeError, match="integer-typed"):
             ordered_cumsum(df, [], "v", mass_cols=["m"])
 
-    def test_small_grid_gate_parity_with_ranged_path(self, spark):
+    def test_small_grid_gate_parity_with_ranged_path(self, spark, monkeypatch):
         """Round-14 gate: the single-window small-grid path and the
         range-partitioned carry path must emit IDENTICAL rows — the
         gate is a strategy pick, never a semantics change. Forced via
-        the conf knob both ways on the same clustered fixture."""
+        the cap constant both ways on the same clustered fixture."""
+        from vnavc_spark.operators import ordering
         from vnavc_spark.operators.ordering import ordered_cumsum
 
         rows = self._rows()
         df = spark.createDataFrame(rows, "g string, v long, m long")
-        key = "spark.vnavc.cumsum.gridCap"
-        try:
-            spark.conf.set(key, "0")  # 0 disables: ranged path
-            ranged = sorted(
-                tuple(r)
-                for r in ordered_cumsum(
-                    df, ["g"], "v", mass_cols=["m"], num_parts=7,
-                    slot="t_gate_off",
-                ).collect()
-            )
-            spark.conf.set(key, "1000000")  # grid fits: small path
-            small = sorted(
-                tuple(r)
-                for r in ordered_cumsum(
-                    df, ["g"], "v", mass_cols=["m"], num_parts=7,
-                    slot="t_gate_on",
-                ).collect()
-            )
-        finally:
-            spark.conf.unset(key)
+        monkeypatch.setattr(ordering, "CUMSUM_GRID_CAP", 0)  # ranged path
+        ranged = sorted(
+            tuple(r)
+            for r in ordered_cumsum(
+                df, ["g"], "v", mass_cols=["m"], num_parts=7,
+                slot="t_gate_off",
+            ).collect()
+        )
+        monkeypatch.setattr(ordering, "CUMSUM_GRID_CAP", 1_000_000)
+        small = sorted(  # grid fits: small path
+            tuple(r)
+            for r in ordered_cumsum(
+                df, ["g"], "v", mass_cols=["m"], num_parts=7,
+                slot="t_gate_on",
+            ).collect()
+        )
         assert ranged == small
         assert {(g, v): c for g, v, _m, c in small} == self._reference(rows)
 
-    def test_decimal_mass_survives_int64_wrap(self, spark):
+    def test_decimal_mass_survives_int64_wrap(self, spark, monkeypatch):
         """Round-13 advice (q185 Σd_x mass): a DECIMAL-typed mass
         column must cumulate in decimal(38,0) — sums past 2^63 that
         would silently wrap a long mass stay exact — on BOTH paths."""
@@ -1613,6 +1604,7 @@ class TestOrderedCumsum:
 
         from pyspark.sql.types import DecimalType
 
+        from vnavc_spark.operators import ordering
         from vnavc_spark.operators.ordering import ordered_cumsum
 
         big = Decimal(2) ** 62
@@ -1620,22 +1612,18 @@ class TestOrderedCumsum:
             [("a", 1, big), ("a", 2, big), ("a", 3, big)],
             "g string, v long, m decimal(38,0)",
         )
-        key = "spark.vnavc.cumsum.gridCap"
         expect = {1: big, 2: 2 * big, 3: 3 * big}
-        try:
-            for cap in ("0", "100"):  # ranged path, then small path
-                spark.conf.set(key, cap)
-                out = ordered_cumsum(
-                    df, ["g"], "v", mass_cols=["m"],
-                    slot=f"t_dec_{cap}",
-                )
-                assert isinstance(
-                    out.schema["cum_m"].dataType, DecimalType
-                ), cap
-                got = {r.v: r.cum_m for r in out.collect()}
-                assert got == expect, cap
-        finally:
-            spark.conf.unset(key)
+        for cap in (0, 100):  # ranged path, then small path
+            monkeypatch.setattr(ordering, "CUMSUM_GRID_CAP", cap)
+            out = ordered_cumsum(
+                df, ["g"], "v", mass_cols=["m"],
+                slot=f"t_dec_{cap}",
+            )
+            assert isinstance(
+                out.schema["cum_m"].dataType, DecimalType
+            ), cap
+            got = {r.v: r.cum_m for r in out.collect()}
+            assert got == expect, cap
 
 
 class TestRrfFuse:

@@ -33,6 +33,17 @@ EMPTY_OK_SF0001 = {
 }
 
 
+def test_accessors_return_registration_order_copies():
+    from vnavc_spark import queries as Q
+
+    assert list(all_queries()) == list(Q.QUERIES)
+    assert list(all_oracles()) == list(Q.ORACLE)
+    n_queries, n_oracles = len(Q.QUERIES), len(Q.ORACLE)
+    all_queries().clear()
+    all_oracles().clear()
+    assert (len(Q.QUERIES), len(Q.ORACLE)) == (n_queries, n_oracles)
+
+
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_match(spark, duck, name):
     res = compare(spark, duck, QUERIES[name], ORACLES[name], SF_SMALL)

@@ -204,6 +204,28 @@ class TestPurePdfExtractor:
         txt = extract_pdf_text_pure(_mini_pdf(self.CONTENT, compress=True))
         assert "Hello Spark" in txt and "dong ba" in txt
 
+    def test_flate_body_ending_in_eol_byte(self):
+        """A compressed body whose own last byte is CR or LF (the
+        adler32 trailer hits 0x0A/0x0D about 1 stream in 128) must
+        still inflate: only the EOL before ``endstream`` is framing."""
+        import random
+        import zlib
+
+        from vnavc_spark.sources.pdf import extract_pdf_text_pure
+
+        rng = random.Random(0)
+        for _ in range(10_000):
+            word = "".join(
+                rng.choices("abcdefghijklmnopqrstuvwxyz", k=rng.randint(4, 40))
+            )
+            content = b"BT (" + word.encode() + b") Tj ET"
+            if zlib.compress(content)[-1:] in (b"\n", b"\r"):
+                break
+        else:
+            raise AssertionError("no CR/LF-terminated stream found")
+        txt = extract_pdf_text_pure(_mini_pdf(content, compress=True))
+        assert txt == word
+
     def test_escapes_and_hex(self):
         from vnavc_spark.sources.pdf import extract_pdf_text_pure
 

@@ -44,14 +44,7 @@ class _LruSlots(dict):
     of ``tracked_persist``'s paths go through ``setdefault`` — the
     ``reuse_same_plan`` hit and the re-persist swap — so a slot kept
     warm purely through reuse (the q124→q131 case) is no longer
-    evicted as "oldest" while colder, newer slots survive (r13 ADVICE).
-    Implemented as the registry's own type, NOT as logic inside
-    ``tracked_persist``: the certification fingerprints hash every
-    query's transitive dependency FUNCTION/CLASS sources, and an edit
-    to ``tracked_persist`` would rotate the entire persist-using
-    registry for a cache-hygiene change (same reasoning as
-    ``trim_slots`` below; an instance in a function's globals is not
-    part of its hashed closure)."""
+    evicted as "oldest" while colder, newer slots survive (r13 ADVICE)."""
 
     def setdefault(self, key, default=None):
         if key in self:
@@ -70,15 +63,8 @@ _LOCK = threading.Lock()
 #: cache per slot NAME: ~100 live slots by the bench tail, real
 #: storage-memory pressure exactly where the heaviest queries run
 #: (q209's in-bench median ran 1.5x its fresh-session wall; round-13
-#: find). Override via $SPARK_GRAFT_PERSIST_SLOT_CAP; 0 disables.
-import os as _os
-
-try:
-    SLOT_CAP = int(_os.environ.get("SPARK_GRAFT_PERSIST_SLOT_CAP", "32"))
-except ValueError:
-    # malformed env value must not crash every import of this module
-    # (r13 ADVICE; matches _cc_driver_edge_cap's fallback stance)
-    SLOT_CAP = 32
+#: find). 0 disables.
+SLOT_CAP = 32
 
 
 def trim_slots(keep_n: int | None = None) -> int:
@@ -87,13 +73,7 @@ def trim_slots(keep_n: int | None = None) -> int:
     for long multi-query sessions (the bench calls this between
     queries). Eviction is always correct (unpersist only drops the
     cache; lineage recomputes); keeping the newest slots preserves
-    the adjacent-query plan reuse (q124→q131). Deliberately a
-    STANDALONE helper rather than logic inside ``tracked_persist``:
-    the certification fingerprints hash every query's transitive
-    dependency sources, and an edit to ``tracked_persist`` itself
-    would force the entire persist-using registry back through the
-    driver's 50-query certification window for a pure cache-hygiene
-    change."""
+    the adjacent-query plan reuse (q124→q131)."""
     if keep_n is None:
         keep_n = SLOT_CAP
     if keep_n <= 0:

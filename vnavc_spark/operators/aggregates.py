@@ -1287,23 +1287,6 @@ def exact_rank_multi(
 RANK_TIE_DIRECT_CAP = 1 << 20
 
 
-def _tie_direct_cap(spark) -> int:
-    import os as _os
-
-    try:
-        return int(
-            spark.conf.get(
-                "spark.vnavc.rank.tieDirectCap",
-                _os.environ.get(
-                    "SPARK_GRAFT_RANK_TIE_DIRECT_CAP",
-                    str(RANK_TIE_DIRECT_CAP),
-                ),
-            )
-        )
-    except ValueError:
-        return RANK_TIE_DIRECT_CAP
-
-
 def rank_bucket_classify(
     df: DataFrame,
     group_cols: list[str],
@@ -1352,8 +1335,8 @@ def rank_bucket_classify(
        exchanges of pure scheduling floor when the tie runs are
        SMALL, and the converged narrowing state already holds every
        group's size ``n`` driver-side with |tie run| <= n — so when
-       max(n) <= ``spark.vnavc.rank.tieDirectCap`` (default 2^20
-       rows, env $SPARK_GRAFT_RANK_TIE_DIRECT_CAP, <= 0 disables)
+       max(n) <= :data:`RANK_TIE_DIRECT_CAP` (2^20 rows, <= 0
+       disables)
        the in-tie rank is ONE row_number window partitioned by
        (group, value): a bounded single-task sort, decided from
        state already collected (no extra job). Above the cap — the
@@ -1464,7 +1447,7 @@ def rank_bucket_classify(
         )
     ).cast("long")
     max_n = max((s["n"] for s in state.values()), default=0)
-    if 0 < max_n <= _tie_direct_cap(spark):
+    if 0 < max_n <= RANK_TIE_DIRECT_CAP:
         wdir = Window.partitionBy(*group_cols, value_col).orderBy(id_col)
         tie = (
             base.filter(is_tie)

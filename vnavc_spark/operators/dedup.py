@@ -899,7 +899,14 @@ def compact_signature_table(
 #: per dedup_clusters call — propagation rounds run, checkpoint
 #: batches (= expensive driver syncs), wall per batch. Cleared and
 #: read by probes/tests; never consulted by the operator itself.
+#: Only the newest 256 records are kept, so a long-lived session
+#: never grows driver memory.
 CC_STATS: list[dict] = []
+
+
+def _record_cc_stats(stats: dict) -> None:
+    CC_STATS.append(stats)
+    del CC_STATS[:-256]
 
 
 #: Default edge-count ceiling below which dedup_clusters solves the
@@ -916,26 +923,8 @@ CC_STATS: list[dict] = []
 #: keep the distributed loop — the cap is a driver-memory knob
 #: (500k doubled edges ≈ tens of MB collected, same class as
 #: spark.sql.autoBroadcastJoinThreshold's reasoning), overridable
-#: per call, via spark.vnavc.cc.driverEdgeCap, or
-#: $SPARK_GRAFT_CC_DRIVER_EDGE_CAP; 0 disables the driver path.
+#: per call; 0 disables the driver path.
 CC_DRIVER_EDGE_CAP = 500_000
-
-
-def _cc_driver_edge_cap(spark) -> int:
-    import os as _os
-
-    try:
-        return int(
-            spark.conf.get(
-                "spark.vnavc.cc.driverEdgeCap",
-                _os.environ.get(
-                    "SPARK_GRAFT_CC_DRIVER_EDGE_CAP",
-                    str(CC_DRIVER_EDGE_CAP),
-                ),
-            )
-        )
-    except ValueError:
-        return CC_DRIVER_EDGE_CAP
 
 
 #: Byte companion to the row cap (round 14, VERDICT #6): the row cap
@@ -945,26 +934,8 @@ def _cc_driver_edge_cap(spark) -> int:
 #: collected PAYLOAD (rows × summed id width, octet lengths for
 #: string/binary ids measured in the same job as the row count) and
 #: falls back to the distributed loop past this many bytes.
-#: Conf spark.vnavc.cc.driverByteCap / env
-#: $SPARK_GRAFT_CC_DRIVER_BYTE_CAP; <= 0 disables the byte check.
+#: <= 0 disables the byte check.
 CC_DRIVER_BYTE_CAP = 64 * 1024 * 1024
-
-
-def _cc_driver_byte_cap(spark) -> int:
-    import os as _os
-
-    try:
-        return int(
-            spark.conf.get(
-                "spark.vnavc.cc.driverByteCap",
-                _os.environ.get(
-                    "SPARK_GRAFT_CC_DRIVER_BYTE_CAP",
-                    str(CC_DRIVER_BYTE_CAP),
-                ),
-            )
-        )
-    except ValueError:
-        return CC_DRIVER_BYTE_CAP
 
 
 def _driver_gate_stats(df: DataFrame, cols: tuple) -> tuple:
@@ -998,7 +969,7 @@ def _driver_gate_stats(df: DataFrame, cols: tuple) -> tuple:
 
 
 def _driver_gate_fits(
-    df: DataFrame, spark, cols: tuple, n_cap: int, n_scale: int = 1
+    df: DataFrame, cols: tuple, n_cap: int, n_scale: int = 1
 ) -> bool:
     """Shared size gate for the driver-side graph mirrors: True when
     the materialized table both row-fits (``n_scale`` lets callers
@@ -1009,8 +980,7 @@ def _driver_gate_fits(
     n, est_bytes = _driver_gate_stats(df, cols)
     if n * n_scale > n_cap:
         return False
-    byte_cap = _cc_driver_byte_cap(spark)
-    return byte_cap <= 0 or est_bytes <= byte_cap
+    return CC_DRIVER_BYTE_CAP <= 0 or est_bytes <= CC_DRIVER_BYTE_CAP
 
 
 def _driver_union_find(edges: DataFrame) -> DataFrame:
@@ -1114,7 +1084,7 @@ def dedup_clusters(
     driver-side union-find instead — identical output (min member
     per component), milliseconds instead of seconds of
     cluster-size-independent checkpoint syncs. The cap defaults to
-    :data:`CC_DRIVER_EDGE_CAP` (conf/env overridable; 0 disables),
+    :data:`CC_DRIVER_EDGE_CAP` (0 disables),
     the same pick-the-strategy-by-size reasoning as a broadcast
     join threshold."""
     # severed checkpoints: plain localCheckpoint captures the origin
@@ -1144,13 +1114,11 @@ def dedup_clusters(
     # 6.5 s -> 0.3 s, identical labels). Above the cap the
     # O(log diameter) distributed loop below is unchanged.
     if driver_edge_cap is None:
-        driver_edge_cap = _cc_driver_edge_cap(pairs.sparkSession)
-    if _driver_gate_fits(
-        edges, pairs.sparkSession, ("src", "dst"), driver_edge_cap
-    ):
+        driver_edge_cap = CC_DRIVER_EDGE_CAP
+    if _driver_gate_fits(edges, ("src", "dst"), driver_edge_cap):
         t0 = _time.perf_counter()
         out = _driver_union_find(edges)
-        CC_STATS.append(
+        _record_cc_stats(
             {
                 "rounds": 0,
                 "batches": 0,
@@ -1166,7 +1134,7 @@ def dedup_clusters(
         .withColumn("label", F.col("node"))
     )
     stats = {"rounds": 0, "batches": 0, "batch_s": []}
-    CC_STATS.append(stats)
+    _record_cc_stats(stats)
     rounds_left = max_iters
     while rounds_left > 0:
         t0 = _time.perf_counter()
@@ -2073,10 +2041,8 @@ def kcore_peel(
     # costs `rounds` checkpoint syncs regardless of cluster size; a
     # cap-gated graph computes the identical sweeps driver-side.
     if driver_edge_cap is None:
-        driver_edge_cap = _cc_driver_edge_cap(pairs.sparkSession)
-    if _driver_gate_fits(
-        both, pairs.sparkSession, ("u", "v"), driver_edge_cap
-    ):
+        driver_edge_cap = CC_DRIVER_EDGE_CAP
+    if _driver_gate_fits(both, ("u", "v"), driver_edge_cap):
         return _driver_kcore_peel(
             both, k=k, rounds=rounds, to_fixpoint=to_fixpoint
         )

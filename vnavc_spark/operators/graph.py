@@ -200,19 +200,14 @@ def triangle_stats(
     # dedup_clusters/kcore_peel gate the doubled table), and this
     # table is undoubled — compare 2·n against it (r13 ADVICE) and
     # byte-check the collect like the other gates.
-    from vnavc_spark.operators.dedup import (
-        _cc_driver_edge_cap,
-        _driver_gate_fits,
-    )
+    from vnavc_spark.operators import dedup
 
     cap = (
-        _cc_driver_edge_cap(edges.sparkSession)
+        dedup.CC_DRIVER_EDGE_CAP
         if driver_edge_cap is None
         else driver_edge_cap
     )
-    if _driver_gate_fits(
-        e, edges.sparkSession, ("a", "b"), cap, n_scale=2
-    ):
+    if dedup._driver_gate_fits(e, ("a", "b"), cap, n_scale=2):
         return _driver_triangle_stats(e)
     deg = tracked_persist(
         e.select(F.col("a").alias("x"))

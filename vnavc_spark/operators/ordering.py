@@ -417,26 +417,8 @@ def ranked_mass_cumsum(
 #: of the range-exchange + carry machinery. 2**21 skinny rows is
 #: ~100 MB of window state worst-case (one group owning the grid) —
 #: comfortably single-task on any executor sizing; larger value
-#: domains take the distributed path. Conf spark.vnavc.cumsum.gridCap
-#: / env $SPARK_GRAFT_CUMSUM_GRID_CAP; 0 disables the gate.
+#: domains take the distributed path. 0 disables the gate.
 CUMSUM_GRID_CAP = 2**21
-
-
-def _cumsum_grid_cap(spark) -> int:
-    import os as _os
-
-    try:
-        return int(
-            spark.conf.get(
-                "spark.vnavc.cumsum.gridCap",
-                _os.environ.get(
-                    "SPARK_GRAFT_CUMSUM_GRID_CAP",
-                    str(CUMSUM_GRID_CAP),
-                ),
-            )
-        )
-    except ValueError:
-        return CUMSUM_GRID_CAP
 
 
 def ordered_cumsum(
@@ -488,14 +470,14 @@ def ordered_cumsum(
     duplicate evaluation even on the large path, because
     ``repartitionByRange``'s boundary-sampling job used to re-run the
     full upstream lineage that the exchange then ran again). When the
-    grid holds at most ``spark.vnavc.cumsum.gridCap`` rows (env
-    $SPARK_GRAFT_CUMSUM_GRID_CAP, default 2**21; 0 disables), the
-    range exchange, the pid bookkeeping, the carry cascade and the
-    carry join are all skipped in favor of ONE per-group running-sum
-    window over the cached grid: at ≤2M skinny rows a single-task
-    sort is far below the multi-job scheduling floor the machinery
-    pays (measured at sf0.1: 150-row grid 0.65 → 0.11 s, 594k-row
-    grid 1.45 → 0.37 s per call, rows bit-identical). Above the cap —
+    grid holds at most :data:`CUMSUM_GRID_CAP` rows (2**21; 0
+    disables), the range exchange, the pid bookkeeping, the carry
+    cascade and the carry join are all skipped in favor of ONE
+    per-group running-sum window over the cached grid: at ≤2M skinny
+    rows a single-task sort is far below the multi-job scheduling
+    floor the machinery pays (measured at sf0.1: 150-row grid 0.65 →
+    0.11 s, 594k-row grid 1.45 → 0.37 s per call, rows
+    bit-identical). Above the cap —
     a value domain too large for one task — the range-partitioned
     carry path is unchanged; that is the 100 TB posture, and the cap
     gates on the EXACT grid count, not an estimate.
@@ -558,8 +540,7 @@ def ordered_cumsum(
     slot = slot or f"ordered_cumsum:{value_col}"
     base = tracked_persist(base, f"{slot}:grid")
     n_grid = base.count()
-    cap = _cumsum_grid_cap(spark)
-    if cap and n_grid <= cap:
+    if CUMSUM_GRID_CAP and n_grid <= CUMSUM_GRID_CAP:
         w_one = (
             Window.partitionBy(*group_cols)
             .orderBy(value_col)

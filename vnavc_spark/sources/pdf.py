@@ -101,14 +101,22 @@ def extract_pdf_text_pure(data: bytes) -> str:
         end = data.find(b"endstream", start)
         if end < 0:
             continue
-        body = data[start:end].rstrip(b"\r\n")
+        body = data[start:end]
         if b"FlateDecode" in m.group(1):
+            # the deflate stream marks its own end, so the EOL before
+            # ``endstream`` lands in unused_data; stripping CR/LF
+            # first would eat a compressed body's own last byte
+            inflater = zlib.decompressobj()
             try:
-                body = zlib.decompress(body)
+                body = inflater.decompress(body)
             except zlib.error:
                 continue
+            if not inflater.eof:
+                continue  # truncated stream
         elif b"/Filter" in m.group(1):
             continue  # unsupported filter (LZW/DCT/...)
+        else:
+            body = body.rstrip(b"\r\n")
         if b"BT" not in body:
             continue  # not a text content stream
         line: list[str] = []
